@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{CorpusPrep, PipelineQueries}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Tier-agnostic invariant gate for the operators whose DuckDB oracles
@@ -19,15 +18,7 @@ object Invariants {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reap dead localCheckpoint blocks promptly (see Bench): the d6/pipe
-      // recomputes checkpoint large frames back-to-back in one session
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
+    val spark = Harness.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     var failures = 0
     def check(name: String)(cond: => Boolean): Unit = {

@@ -1,10 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Per-query timing loop for perf work: runs the given query names N times
-  * each through the noop sink (same materialization as [[Bench]]) and
-  * prints every run's seconds plus the median — so a regression can be
-  * told apart from JIT/neighbor noise before believing it.
+/** The per-query timer for perf work: runs the given query names N times
+  * each with [[Bench]]'s methodology ([[Harness]]) and prints every run's
+  * seconds plus the median — so a regression can be told apart from
+  * JIT/neighbor noise before believing it. A query that throws aborts the
+  * run; an unknown name is reported and makes the exit status 1.
   * Usage: Profile [sfDir] [repeats] [name...]
   */
 object Profile {
@@ -14,19 +14,7 @@ object Profile {
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("q1_pricing_summary", "j4_expr_key_join", "j6_range_join",
         "m1_multimodal_meta", "d2_minhash_lsh")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same checkpoint-reaping hygiene as Bench: without it, dead
-      // localCheckpoint blocks pile up for the 30-min default periodicGC
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = Harness.warmSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     var sawUnknown = false
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
@@ -36,22 +24,8 @@ object Profile {
           sawUnknown = true
           System.err.println(s"$n: unknown query (known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})")
         case Some(q) =>
-          val times = (1 to repeats).map { _ =>
-            val before = spark.sparkContext.getPersistentRDDs.keySet
-            val t0 = System.nanoTime()
-            q(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            spark.sqlContext.clearCache()
-            // deterministic release (see Bench): dead localCheckpoint
-            // blocks drop NOW, not when the async cleaner gets to them —
-            // scoped to blocks THIS run created (Bench's invariant)
-            spark.sparkContext.getPersistentRDDs
-              .filterNot { case (id, _) => before.contains(id) }
-              .values.foreach(_.unpersist(blocking = true))
-            System.gc() // reap dead localCheckpoints between runs
-            sec
-          }
-          val med = times.sorted.apply(times.size / 2)
+          val times = Harness.time(spark, repeats)(q(spark, sfDir))(e => throw e)
+          val med = Harness.median(times)
           println(f"$n%-24s median=$med%7.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}")
       }
     }

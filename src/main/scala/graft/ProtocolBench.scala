@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** The protocol-class ledger — end-to-end timings for every query
   * [[Bench.ProtocolClass]] excludes from the throughput bench (full DAG
@@ -19,66 +18,18 @@ object ProtocolBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // protocol queries own their temp store trees; between runs only the
-    // session-level residue (caches, dead checkpoint blocks) is released
-    // name -> failed-run count (Bench's discipline): a store-path query
-    // that crashes returns fast, so without the marker a regression-to-
-    // crash would read as a speedup on this ledger
-    val failures = scala.collection.mutable.Map[String, Int]()
-    def timeOne(name: String): Double = {
-      val times = (1 to runs).map { _ =>
-        // only blocks created by THIS run are released (see Bench): a
-        // localCheckpoint block referenced by future cross-query state
-        // would be unrecoverable once unpersisted
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          failures(name) = failures.getOrElse(name, 0) + 1
-          System.err.println(s"[protocol-bench] $name failed: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.sqlContext.clearCache()
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => before.contains(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        sec
-      }
-      times.sorted.apply(times.size / 2)
-    }
+    val spark = Harness.warmSession(cpus)
     // intersect with the live query map: a ProtocolClass name that no
     // longer exists must fail loudly, not silently shrink the ledger
     val missing = Bench.ProtocolClass -- SparkEntry.queries.keySet
     require(missing.isEmpty, s"ProtocolClass names not in SparkEntry.queries: $missing")
-    val results = Bench.ProtocolClass.toSeq.sorted.map(n => n -> timeOne(n))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val (worstName, worst) = results.maxBy(_._2)
-    val failedJson = failures.toSeq.sortBy(_._1)
-      .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"protocol_total","value":$total,"unit":"sec","worst":$worst,"worst_query":"$worstName","sf":"$sfDir","runs_per_query":$runs,"failed_runs":$failedJson,"queries":$qs}"""
+    // protocol queries own their temp store trees; between runs only the
+    // session-level residue (caches, dead checkpoint blocks) is released
+    val (results, failures) = Harness.medians(spark, sfDir,
+      Bench.ProtocolClass.toSeq.sorted, runs, "protocol-bench")
+    val line = Harness.ledgerLine("protocol_total", results, results, failures, sfDir, runs)
     println(line)
-    try {
-      val out = java.nio.file.Paths.get("target/protocol_bench.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.writeString(out, line + "\n")
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[protocol-bench] could not persist: $e")
-    }
+    Harness.persist("target/protocol_bench.json", line, "protocol-bench")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,16 +17,7 @@ object Verify {
         SparkEntry.queries.view.filterKeys(names).toMap
       } else SparkEntry.queries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reap dead localCheckpoint blocks promptly (see Bench) — a full
-      // 78-query dump in one session otherwise accumulates them for the
-      // 30-min default periodicGC and thrashes the later queries
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
+    val spark = Harness.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>

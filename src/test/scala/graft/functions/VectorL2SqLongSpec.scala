@@ -23,11 +23,23 @@ class VectorL2SqLongSpec extends SparkSpec {
 
   test("interpreted eval matches codegen") {
     GraftFunctions.ensureRegistered(spark)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    // wholeStage=false alone still compiles each projection; NO_CODEGEN
+    // makes every projection evaluate through nullSafeEval
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val r = df.select(expr("vector_l2sq(a, b)")).as[Long].collect()
       assert(r.toSeq == Seq(25L, 2000000000000L))
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      // the null branches: mismatched lengths, a null array, a null element
+      val nulls = Seq(
+        (Option(Seq(Option(1L), Option(2L), Option(3L))), Option(Seq(Option(1L)))),
+        (Option(Seq(Option(1L), Option(2L))), Option.empty[Seq[Option[Long]]]),
+        (Option(Seq(Option(1L), None)), Option(Seq(Option(1L), Option(2L)))))
+        .toDF("a", "b").select(expr("vector_l2sq(a, b)")).collect()
+      assert(nulls.length == 3 && nulls.forall(_.isNullAt(0)))
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("mismatched lengths yield null, like the zip_with pad") {
