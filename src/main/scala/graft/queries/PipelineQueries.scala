@@ -64,27 +64,59 @@ object PipelineQueries {
     * Failures are loud and contained: `b` runs in its own job group, so
     * when `a` throws, `b`'s jobs are cancelled (again until `b` returns,
     * covering a job `b` starts after the first cancel) and `b` is awaited
-    * before `a`'s exception is rethrown — nothing of this call keeps
-    * running behind the caller. A failure of `b` alone rethrows from the
-    * Await. */
+    * before `a`'s exception is rethrown. A task the scheduler launches
+    * just after its job was cancelled escapes that kill, so a listener
+    * scoped to the call tracks the running tasks of `b`'s stages, and the
+    * rethrow also waits (bounded, 30 s) until none is left, killing each
+    * stray attempt — nothing of this call keeps running behind the
+    * caller. A failure of `b` alone rethrows from the Await. */
   private[graft] def inParallel[A, B](spark: SparkSession, a: => A, b: => B): (A, B) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
+      SparkListenerTaskEnd, SparkListenerTaskStart}
     import scala.concurrent.{blocking, Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     val sc = spark.sparkContext
     val group = s"graft-inParallel-${java.util.UUID.randomUUID}"
-    val fb = Future(blocking {
-      sc.setJobGroup(group, "inParallel: second branch", interruptOnCancel = true)
-      try b finally sc.clearJobGroup()
-    })
-    val ra = try a catch { case e: Throwable =>
-      while (!fb.isCompleted) {
-        sc.cancelJobGroup(group)
-        scala.util.Try(Await.ready(fb, 50.millis))
-      }
-      throw e
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    @volatile var lastEvent = System.nanoTime()
+    val tracker = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) {
+          running.add(e.taskInfo.taskId)
+          lastEvent = System.nanoTime()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (running.remove(e.taskInfo.taskId)) lastEvent = System.nanoTime()
     }
-    (ra, Await.result(fb, Duration.Inf))
+    sc.addSparkListener(tracker)
+    try {
+      val fb = Future(blocking {
+        sc.setJobGroup(group, "inParallel: second branch", interruptOnCancel = true)
+        try b finally sc.clearJobGroup()
+      })
+      val ra = try a catch { case e: Throwable =>
+        while (!fb.isCompleted) {
+          sc.cancelJobGroup(group)
+          scala.util.Try(Await.ready(fb, 50.millis))
+        }
+        // listener events arrive asynchronously: done once no task of b
+        // runs and none has started or ended for 500 ms
+        val deadline = System.nanoTime() + 30.seconds.toNanos
+        while ((!running.isEmpty || System.nanoTime() - lastEvent < 500.millis.toNanos) &&
+            System.nanoTime() < deadline) {
+          running.forEach(id =>
+            sc.killTaskAttempt(id, interruptThread = true, "inParallel: sibling branch failed"))
+          Thread.sleep(50)
+        }
+        throw e
+      }
+      (ra, Await.result(fb, Duration.Inf))
+    } finally sc.removeSparkListener(tracker)
   }
 
   // ---- deterministic pseudo-random literals (shared with the oracles) ----
@@ -137,6 +169,18 @@ object PipelineQueries {
     * covers any |x| < 1 input with 40%+ headroom (embeddings are unit-ish,
     * components observed in (−0.58, 0.52); centroid literals in ±0.5). */
   val KmOff = 1000000L
+
+  /** The 1e-6 fixed-point rounding `floor(x·1e6 + 0.5)` behind every exact
+    * vector and sketch surface (cosines, quantized vectors, sample
+    * weights): one IEEE multiply, add and floor per value, bit-identical in
+    * any engine, so the oracles hash-match the rounded longs. */
+  private[graft] def e6(x: Column): Column = floor(x * lit(1e6) + lit(0.5))
+  /** [[e6]]'s driver-side twin for literals, bit-equal on every double. */
+  private[graft] def e6(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
+  /** [[e6]] per element of an array column (elements cast to double),
+    * shifted by `off` — [[KmOff]] for the all-positive k-means units. */
+  private[graft] def e6Array(arr: Column, off: Long = 0L): Column =
+    transform(arr, x => { val q = e6(x.cast(DoubleType)); if (off == 0L) q else q + lit(off) })
 
   /** 4 independent LSH tables × 6 hyperplanes for the near-dup pair miner
     * (multiple small tables trade bucket selectivity for recall). */
@@ -608,30 +652,12 @@ object PipelineQueries {
       .localCheckpoint() // feeds the explode AND both verify name fetches
     val rmap = cust.join(reps, "name").select(col("id"), col("rid"))
       .localCheckpoint() // feeds both expansion fetches AND the exact-dup join
-    // i = 0 keeps the string itself; i = 1..len deletes char i. (rid, vh)
-    // dedups the duplicate deletions repeated characters produce.
-    // r15 opt: within-name duplicate deletions dedup map-side via
-    // array_distinct — no post-explode shuffle; fanOut the NAME rows
-    // first (see d14bNamePairs)
-    val nb = fanOut(spark, reps).select(col("rid"), explode(expr(
-        "array_distinct(transform(sequence(0, length(name)), i -> CASE WHEN i = 0 THEN name " +
-          "ELSE concat(substring(name, 1, i - 1), substring(name, i + 1)) END))"))
-        .as("v"))
-      .select(col("rid"), xxhash64(col("v")).as("vh"))
-      .localCheckpoint() // feeds both sides of the candidate self-join
-    val candR = nb.as("x").join(nb.as("y"),
-        col("x.vh") === col("y.vh") && col("x.rid") < col("y.rid"))
-      .select(col("x.rid").as("a_rid"), col("y.rid").as("b_rid"))
-      .distinct() // a pair can share several members; verify each pair once
-      .join(reps.select(col("rid").as("a_rid"), col("name").as("a_name")), "a_rid")
-      .join(reps.select(col("rid").as("b_rid"), col("name").as("b_name")), "b_rid")
-      .withColumn("dist", expr("levenshtein(a_name, b_name, 1)"))
-      .filter(col("dist") >= 0) // thresholded form returns -1 past the bound
+    val candR = fuzzyNamePairs(spark, reps, 1, None)
     // expand verified name pairs to id pairs (disjoint groups — each
     // unordered pair appears exactly once, canonicalized a_id < b_id) ...
     val cross = candR
-      .join(rmap.select(col("rid").as("a_rid"), col("id").as("ia")), "a_rid")
-      .join(rmap.select(col("rid").as("b_rid"), col("id").as("ib")), "b_rid")
+      .join(rmap.select(col("rid").as("a_id"), col("id").as("ia")), "a_id")
+      .join(rmap.select(col("rid").as("b_id"), col("id").as("ib")), "b_id")
       .select(least(col("ia"), col("ib")).as("a_id"),
         greatest(col("ia"), col("ib")).as("b_id"), col("dist").cast("long").as("dist"))
     // ... plus the exact-duplicate pairs (identical names, distance 0):
@@ -712,56 +738,75 @@ object PipelineQueries {
     require(maxLen <= D14bPrefix,
       s"d14b: name length $maxLen exceeds the $D14bPrefix-char SymSpell " +
         "prefix — the 2-deletion neighborhood would no longer be complete")
-    // match field: the first D14bPrefix chars. L = its length; deletion
-    // position sets S ⊆ {1..L}, |S| ≤ 2. sequence() descends when start >
-    // stop, so the two-deletion block is guarded for L < 2 (and the
-    // single-deletion block for empty names).
-    // r15 opt (§2.4 remove shuffles outright): duplicate deletions from
-    // repeated characters are WITHIN-name (rid is in the dedup key), so
-    // array_distinct before the explode removes them map-side — the old
-    // post-explode .distinct() shuffled the full 300×-exploded member
-    // stream (4.6M rows at the 15k-name tiers) through an exchange+agg
-    // for the same result. (A within-name xxhash64 collision between two
-    // DIFFERENT variants would now survive as two equal (rid, vh) rows;
-    // the candidate pair-level distinct below absorbs exactly that.)
-    // fanOut FIRST: the old post-explode distinct's exchange was also
-    // (accidentally) redistributing the exploded stream — without it the
-    // AQE-coalesced 15k-row reps frame would fan 300× inside ONE task.
-    // Repartitioning the NAME rows costs 15k-row shuffle, not 4.6M.
-    val nb = fanOut(spark, reps).select(col("rid"), explode(expr(
-        s"""array_distinct(concat(
-           |  array(name),
-           |  CASE WHEN length(name) >= 1 THEN
-           |    transform(sequence(1, least(length(name), $D14bPrefix)),
-           |      i -> concat(substring(name, 1, i - 1), substring(name, i + 1)))
-           |  ELSE array() END,
-           |  CASE WHEN least(length(name), $D14bPrefix) >= 2 THEN
-           |    flatten(transform(sequence(1, least(length(name), $D14bPrefix) - 1),
-           |      i -> transform(sequence(i + 1, least(length(name), $D14bPrefix)),
-           |        j -> concat(substring(name, 1, i - 1),
-           |                    substring(name, i + 1, j - i - 1),
-           |                    substring(name, j + 1)))))
-           |  ELSE array() END))""".stripMargin)).as("v"), length(col("name")).as("len"))
-      .select(col("rid"), xxhash64(col("v")).as("vh"), col("len"))
-      .localCheckpoint() // feeds both sides of the candidate self-join
-    // length band |len(a) − len(b)| ≤ 2 — the standard SymSpell candidate
-    // filter: lev(a,b) ≤ 2 bounds the length difference, so the predicate
-    // is lossless and prunes the verify stream before the pair-dedup
-    val verified = nb.as("x").join(nb.as("y"),
-        col("x.vh") === col("y.vh") && col("x.rid") < col("y.rid") &&
-          abs(col("x.len") - col("y.len")) <= 2)
-      .select(col("x.rid").as("a_id"), col("y.rid").as("b_id"))
-      .distinct() // a pair shares many members; verify each pair once
-      .join(reps.select(col("rid").as("a_id"), col("name").as("a_name"),
-        col("n").as("a_n")), "a_id")
-      .join(reps.select(col("rid").as("b_id"), col("name").as("b_name"),
-        col("n").as("b_n")), "b_id")
-      .withColumn("dist", expr("levenshtein(a_name, b_name, 2)"))
-      .filter(col("dist") >= 0) // thresholded form returns -1 past the bound
     // materialize the verified pairs ONCE (r14 opt, guide §1/§2.4): both
     // consumers end in a global orderBy whose range exchange's sampling
     // job would otherwise re-execute the whole verify chain
-    verified.localCheckpoint()
+    fuzzyNamePairs(spark, reps, 2, Some(D14bPrefix)).localCheckpoint()
+  }
+
+  /** SymSpell deletion neighborhood of every distinct name in `reps`
+    * (rid, name, ...): the name itself plus each string left by deleting
+    * up to `k` (1 or 2) characters inside the first `prefix` characters
+    * (anywhere when `prefix` is None), as (rid, vh = xxhash64 of the
+    * member, len = full name length), checkpointed because it feeds both
+    * sides of the candidate self-join (the d2/d4 lesson).
+    *
+    * sequence() descends when start > stop, so each deletion block is
+    * guarded (the one-deletion block for empty names, the two-deletion
+    * block for a match field shorter than 2). Duplicate members from
+    * repeated characters are WITHIN-name (rid is in the dedup key), so
+    * array_distinct removes them map-side before the explode (r15 opt,
+    * §2.4: no post-explode shuffle of the exploded stream; a within-name
+    * xxhash64 collision between two different members survives as two
+    * equal rows, which the candidate pair-level distinct absorbs). The
+    * NAME rows are fanned out first: without it the AQE-coalesced
+    * distinct-name frame would explode (1 + L + L(L−1)/2)× inside one
+    * task, and repartitioning the names shuffles |names| rows, not the
+    * exploded stream. */
+  private def deletionNeighborhood(spark: SparkSession, reps: DataFrame, k: Int,
+                                   prefix: Option[Int]): DataFrame = {
+    require(k == 1 || k == 2, s"deletion neighborhood: k = $k, only 1 and 2 are built")
+    val len = prefix.fold("length(name)")(p => s"least(length(name), $p)")
+    // the name with the chars at 1-based positions ps (ascending) deleted
+    def deleteAt(ps: String*): String = {
+      val gaps = ps.zip(ps.tail).map { case (a, b) => s"substring(name, $a + 1, $b - $a - 1)" }
+      ((s"substring(name, 1, ${ps.head} - 1)" +: gaps) :+ s"substring(name, ${ps.last} + 1)")
+        .mkString("concat(", ", ", ")")
+    }
+    val one = s"transform(sequence(1, $len), i -> ${deleteAt("i")})"
+    val two = s"flatten(transform(sequence(1, $len - 1), " +
+      s"i -> transform(sequence(i + 1, $len), j -> ${deleteAt("i", "j")})))"
+    val blocks = Seq(s"CASE WHEN length(name) >= 1 THEN $one ELSE array() END") ++
+      (if (k == 2) Seq(s"CASE WHEN $len >= 2 THEN $two ELSE array() END") else Nil)
+    val members = ("array(name)" +: blocks).mkString("array_distinct(concat(", ", ", "))")
+    fanOut(spark, reps)
+      .select(col("rid"), explode(expr(members)).as("v"), length(col("name")).as("len"))
+      .select(col("rid"), xxhash64(col("v")).as("vh"), col("len"))
+      .localCheckpoint() // feeds both sides of the candidate self-join
+  }
+
+  /** Candidate → verify chain over the ≤ k-deletion neighborhoods of the
+    * distinct names in `reps` (rid, name, extra columns...): the
+    * neighborhood self-join on the member hash, banded by
+    * |len(a) − len(b)| ≤ k (lev ≤ k bounds the length difference, so the
+    * band is lossless and prunes the stream before the pair dedup), each
+    * candidate pair once, then the thresholded `levenshtein(a, b, k)`
+    * verify. One row per verified pair: a_id < b_id (rids), each side's
+    * reps columns prefixed a_/b_, dist (int, 1..k). Not materialized. */
+  private def fuzzyNamePairs(spark: SparkSession, reps: DataFrame, k: Int,
+                             prefix: Option[Int]): DataFrame = {
+    val nb = deletionNeighborhood(spark, reps, k, prefix)
+    def side(s: String) = reps.select(("rid" +: reps.columns.filterNot(_ == "rid"))
+      .map(c => col(c).as(if (c == "rid") s"${s}_id" else s"${s}_$c")): _*)
+    nb.as("x").join(nb.as("y"),
+        col("x.vh") === col("y.vh") && col("x.rid") < col("y.rid") &&
+          abs(col("x.len") - col("y.len")) <= k)
+      .select(col("x.rid").as("a_id"), col("y.rid").as("b_id"))
+      .distinct() // a pair shares many members; verify each pair once
+      .join(side("a"), "a_id")
+      .join(side("b"), "b_id")
+      .withColumn("dist", expr(s"levenshtein(a_name, b_name, $k)"))
+      .filter(col("dist") >= 0) // thresholded form returns -1 past the bound
   }
 
   /** Per-side id cap for [[d14cFuzzyExpand]]: each duplicate group
@@ -823,28 +868,6 @@ object PipelineQueries {
   /** Arrival batches the corpus replays as (doc_id-ordered terciles). */
   val D15Batches = 3
 
-  /** Incremental near-duplicate ADMISSION — the dedup twin of v15's
-    * persisted ANN index: the corpus arrives as [[D15Batches]]
-    * doc_id-ordered batches and the near-dup state (LSH band buckets +
-    * shingle-id sets of every doc SEEN so far, admitted or rejected —
-    * dedup-against-seen, so rejection chains still block) persists in the
-    * snapshot store between runs. A doc is admitted iff no earlier doc is
-    * a verified near-dup: candidates from the band-bucket equi-join of
-    * the batch against state ∪ itself, verified at d2's exact integer
-    * threshold (2·|∩| ≥ |∪|). The admitted set is provably
-    * batch-partition-invariant (the bucket join is symmetric and
-    * "earlier" is doc_id order), which is exactly what lets a DECLARATIVE
-    * oracle grade an incremental pipeline.
-    *
-    * Scale shape: per batch, signatures are computed for BATCH docs only
-    * (the one-shot d2 pass re-signs the corpus every run); the candidate
-    * join is batch-buckets × colliding-state (state side never
-    * self-joins), verify joins fetch only candidate docs' shingle rows
-    * from the store by key; the buckets merge redelivers the previous
-    * batch's head rows to prove the keyed merge swallows replays (v15's
-    * discipline). State is ~17 rows/doc (16 band longs + 1 shingle array)
-    * — at 10¹⁰ docs a bucketable, incrementally-merged table, never
-    * recomputed. */
   /** The [[D15Batches]]-batch admission state machine (d15's body):
     * replays the corpus as doc_id-ordered terciles through the
     * bucket/shingle state tables under `root` and returns one
@@ -917,6 +940,28 @@ object PipelineQueries {
     }
   }
 
+  /** Incremental near-duplicate ADMISSION — the dedup twin of v15's
+    * persisted ANN index: the corpus arrives as [[D15Batches]]
+    * doc_id-ordered batches and the near-dup state (LSH band buckets +
+    * shingle-id sets of every doc SEEN so far, admitted or rejected —
+    * dedup-against-seen, so rejection chains still block) persists in the
+    * snapshot store between runs. A doc is admitted iff no earlier doc is
+    * a verified near-dup: candidates from the band-bucket equi-join of
+    * the batch against state ∪ itself, verified at d2's exact integer
+    * threshold (2·|∩| ≥ |∪|). The admitted set is provably
+    * batch-partition-invariant (the bucket join is symmetric and
+    * "earlier" is doc_id order), which is exactly what lets a DECLARATIVE
+    * oracle grade an incremental pipeline.
+    *
+    * Scale shape: per batch, signatures are computed for BATCH docs only
+    * (the one-shot d2 pass re-signs the corpus every run); the candidate
+    * join is batch-buckets × colliding-state (state side never
+    * self-joins), verify joins fetch only candidate docs' shingle rows
+    * from the store by key; the buckets merge redelivers the previous
+    * batch's head rows to prove the keyed merge swallows replays (v15's
+    * discipline). State is ~17 rows/doc (16 band longs + 1 shingle array)
+    * — at 10¹⁰ docs a bucketable, incrementally-merged table, never
+    * recomputed. */
   val d15IncrementalNeardup: Q = (spark, dir) => {
     val root = java.nio.file.Files.createTempDirectory("graft-neardup").toString
     try admissionRun(spark, dir, root).orderBy(col("doc_id"))
@@ -1542,7 +1587,7 @@ object PipelineQueries {
     e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 10)
       .select(col("q_id"), col("rk"), col("vec_id"), col("cos_e6"))
@@ -1572,7 +1617,7 @@ object PipelineQueries {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_e6").desc, col("vec_id"))
     e.join(broadcast(q), col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("q_id"), col("rk"), col("vec_id"), col("cos_e6"))
@@ -1581,14 +1626,6 @@ object PipelineQueries {
 
   // ---- V3: IVF-bucketed ANN (inverted-file scale path) ---------------------
 
-  /** IVF ANN: every vector lands in the cell of its nearest coarse-quantizer
-    * centroid (one argmax over [[IvfCells]] dot-product scores — the
-    * inverted file); each query probes its [[IvfProbe]] best cells and
-    * ranks only those candidates by exact cosine. Complements v2: sign-LSH
-    * partitions by random hyperplanes, IVF by data-shaped regions, and the
-    * probe count tunes recall without touching the index. The centroids and
-    * the ‖c‖²/2 terms are literals, so cell assignment — and therefore the
-    * result — is reproduced exactly by the oracle. */
   /** Vectors with their IVF cell: `(vec_id, v, nrm, s, cell)` where `s` is
     * the per-centroid score array and `cell` the 1-based argmax. Shared by
     * the v3 index and the d7 semantic dedup; checkpointed because every
@@ -1622,7 +1659,7 @@ object PipelineQueries {
     * streaming ingest can index a micro-batch directly. */
   private[graft] def ivfpqIndexRows(emb: DataFrame): DataFrame =
     assignCells(emb)
-      .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+      .withColumn("u", e6Array(col("v")))
       .withColumn("dl", expr(pqDistListsSql))
       .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
       .select(col("vec_id"), col("cell"), col("code"))
@@ -1674,12 +1711,20 @@ object PipelineQueries {
     e.join(broadcast(v14KeptCells(e)),
         col("cell") === col("probe") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .filter(col("cos_e6") >= lit((RangeTau * 1e6).toLong))
       .select(col("q_id"), col("vec_id"), col("cos_e6"))
       .orderBy(col("q_id"), col("vec_id"))
   }
 
+  /** IVF ANN: every vector lands in the cell of its nearest coarse-quantizer
+    * centroid (one argmax over [[IvfCells]] dot-product scores — the
+    * inverted file); each query probes its [[IvfProbe]] best cells and
+    * ranks only those candidates by exact cosine. Complements v2: sign-LSH
+    * partitions by random hyperplanes, IVF by data-shaped regions, and the
+    * probe count tunes recall without touching the index. The centroids and
+    * the ‖c‖²/2 terms are literals, so cell assignment — and therefore the
+    * result — is reproduced exactly by the oracle. */
   val v3AnnIvf: Q = (spark, dir) => {
     val e = ivfAssigned(spark, dir)
     val q = e.filter(col("vec_id") < 5)
@@ -1691,7 +1736,7 @@ object PipelineQueries {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_e6").desc, col("vec_id"))
     e.join(broadcast(q), col("cell") === col("probe") && col("vec_id") =!= col("q_id"))
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("q_id"), col("rk"), col("vec_id"), col("cos_e6"))
@@ -1735,9 +1780,9 @@ object PipelineQueries {
     e.crossJoin(broadcast(qry))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("qcos_e6",
-        floor((expr("vector_dot(q, pq)") / (col("qn") * col("pqn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(q, pq)") / (col("qn") * col("pqn"))))
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, pv)") / (col("nrm") * col("pn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, pv)") / (col("nrm") * col("pn"))))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("q_id"), col("rk"), col("vec_id"), col("qcos_e6"), col("cos_e6"))
@@ -1768,7 +1813,18 @@ object PipelineQueries {
     * exact domain (v5's fixed-point argument; no division anywhere, so no
     * offset is even needed: squared differences are sign-safe). */
   private[graft] val PqCodebookQ: Seq[Seq[Seq[Long]]] =
-    PqCodebook.map(_.map(_.map(d => math.floor(d * 1e6 + 0.5).toLong)))
+    PqCodebook.map(_.map(_.map(e6(_))))
+
+  /** The per-(subspace, sub-centroid) squared-distance table of a 1e-6-unit
+    * quantized vector column `u` — the expression both v6 and v7 score
+    * with (and the ADC lookup table when kept on the query side). */
+  private lazy val pqDistListsSql: String = {
+    def subDist(m: Int, k: Int) =
+      s"vector_l2sq(slice(u, ${m * PqDim + 1}, $PqDim), ${centLit(PqCodebookQ(m)(k))})"
+    (0 until PqSub).map(m =>
+      (0 until PqK).map(k => subDist(m, k)).mkString("array(", ",", ")"))
+      .mkString("array(", ",", ")")
+  }
 
   /** Product-quantization top-5 (Jégou et al., PAMI 2011): encode every
     * vector as [[PqSub]] sub-centroid indices, rank by ASYMMETRIC DISTANCE
@@ -1783,23 +1839,10 @@ object PipelineQueries {
     * ADC / ranking are all exact integer sums — the oracle reproduces the
     * hash at any engine version. Ties: first-min sub-centroid, then
     * (adc, vec_id) ranking order. */
-  /** The per-(subspace, sub-centroid) squared-distance table of a 1e-6-unit
-    * quantized vector column `u` — the expression both v6 and v7 score
-    * with (and the ADC lookup table when kept on the query side). */
-  private lazy val pqDistListsSql: String = {
-    def subDist(m: Int, k: Int) =
-      s"""vector_l2sq(slice(u, ${m * PqDim + 1}, $PqDim),
-         |  cast(array(${PqCodebookQ(m)(k).mkString(",")}) as array<bigint>))""".stripMargin
-    (0 until PqSub).map(m =>
-      (0 until PqK).map(k => subDist(m, k)).mkString("array(", ",", ")"))
-      .mkString("array(", ",", ")")
-  }
-
   val v6PqTopk: Q = (spark, dir) => {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val enc = fanOut(spark, t(spark, dir, "embeddings"))
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint))").as("u"))
+      .select(col("vec_id"), e6Array(col("embedding")).as("u"))
       .withColumn("dl", expr(pqDistListsSql))
       .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
       .drop("u")
@@ -1836,7 +1879,7 @@ object PipelineQueries {
     * by construction). */
   val v7IvfPq: Q = (spark, dir) => {
     val enc = ivfAssigned(spark, dir)
-      .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+      .withColumn("u", e6Array(col("v")))
       .withColumn("dl", expr(pqDistListsSql))
       .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
       .drop("u", "v", "nrm")
@@ -1884,7 +1927,7 @@ object PipelineQueries {
     try {
       def indexRows(of: DataFrame => DataFrame): DataFrame =
         of(ivfAssigned(spark, dir))
-          .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+          .withColumn("u", e6Array(col("v")))
           .withColumn("dl", expr(pqDistListsSql))
           .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
           .select(col("vec_id"), col("cell"), col("code"))
@@ -1912,7 +1955,7 @@ object PipelineQueries {
   private def serveIvfpq(spark: SparkSession, dir: String,
                          index: DataFrame): DataFrame = {
     val q = ivfAssigned(spark, dir).filter(col("vec_id") < 5)
-      .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+      .withColumn("u", e6Array(col("v")))
       .withColumn("dl", expr(pqDistListsSql))
       .withColumn("s2",
         expr("transform(s, (x, i) -> IF(i = cell - 1, CAST(-1e18 AS DOUBLE), x))"))
@@ -1961,7 +2004,7 @@ object PipelineQueries {
       // day 0: the full corpus index through the incremental sink
       SnapshotStore.merge(spark, root,
         ivfAssigned(spark, dir)
-          .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+          .withColumn("u", e6Array(col("v")))
           .withColumn("dl", expr(pqDistListsSql))
           .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
           .select(col("vec_id"), col("cell"), col("code")),
@@ -2025,7 +2068,7 @@ object PipelineQueries {
   private[graft] def ivfpqRebuild(spark: SparkSession, dir: String,
                                   corpusPred: Column): DataFrame = {
     val enc = ivfAssigned(spark, dir)
-      .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+      .withColumn("u", e6Array(col("v")))
       .withColumn("dl", expr(pqDistListsSql))
       .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
       .drop("u", "v", "nrm")
@@ -2067,14 +2110,14 @@ object PipelineQueries {
     try {
       SnapshotStore.merge(spark, root,
         ivfAssigned(spark, dir)
-          .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+          .withColumn("u", e6Array(col("v")))
           .withColumn("dl", expr(pqDistListsSql))
           .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
           .select(col("vec_id"), col("cell"), col("code")),
         Seq("vec_id"), partitionDate = Some(col("cell")))
       val index = SnapshotStore.readWithPartition(spark, root).get
       val q = ivfAssigned(spark, dir).filter(col("vec_id") < 5)
-        .withColumn("u", expr("transform(v, x -> cast(floor(x * 1000000.0d + 0.5d) as bigint))"))
+        .withColumn("u", e6Array(col("v")))
         .withColumn("dl", expr(pqDistListsSql))
         .withColumn("s2",
           expr("transform(s, (x, i) -> IF(i = cell - 1, CAST(-1e18 AS DOUBLE), x))"))
@@ -2161,7 +2204,7 @@ object PipelineQueries {
     e.join(broadcast(shortlist), "vec_id") // float vectors: shortlist rows only
       .join(broadcast(qf), "q_id")
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(wFull))
       .filter(col("rk") <= BinK)
       .select(col("q_id"), col("rk"), col("vec_id"), col("ham"), col("cos_e6"))
@@ -2244,7 +2287,7 @@ object PipelineQueries {
     enc.join(broadcast(shortlist), "vec_id") // float vectors: shortlist rows only
       .join(broadcast(qf), "q_id")
       .withColumn("cos_e6",
-        floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+        e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(wFull))
       .filter(col("rk") <= SqK)
       .select(col("q_id"), col("rk"), col("vec_id"), col("adc_dist"), col("cos_e6"))
@@ -2470,7 +2513,7 @@ object PipelineQueries {
     val wPre = Window.partitionBy(col("q_id")).orderBy(col("pcos_e6").desc, col("vec_id"))
     val shortlist = prefix.crossJoin(broadcast(qp))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("pcos_e6", floor((expr("vector_dot(p, qp)") / (col("pn") * col("qpn"))) * lit(1e6) + lit(0.5)))
+      .withColumn("pcos_e6", e6(expr("vector_dot(p, qp)") / (col("pn") * col("qpn"))))
       .withColumn("prk", row_number().over(wPre))
       .filter(col("prk") <= MatShortlist)
       .select(col("q_id"), col("vec_id"), col("pcos_e6"))
@@ -2479,7 +2522,7 @@ object PipelineQueries {
     val wFull = Window.partitionBy(col("q_id")).orderBy(col("cos_e6").desc, col("vec_id"))
     full.join(broadcast(shortlist), "vec_id") // full vectors: shortlist rows only
       .join(broadcast(qf), "q_id")
-      .withColumn("cos_e6", floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+      .withColumn("cos_e6", e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(wFull))
       .filter(col("rk") <= MatK)
       .select(col("q_id"), col("rk"), col("vec_id"), col("pcos_e6"), col("cos_e6"))
@@ -2526,7 +2569,7 @@ object PipelineQueries {
       .filter(col("label").isin(FannLabels: _*)) // pushed to the scan
       .join(broadcast(q), col("label") === col("want"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_e6", floor((expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))) * lit(1e6) + lit(0.5)))
+      .withColumn("cos_e6", e6(expr("vector_dot(v, qv)") / (col("nrm") * col("qn"))))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= FannK)
       .select(col("q_id"), col("rk"), col("vec_id"), col("label"), col("cos_e6"))
@@ -2601,6 +2644,76 @@ object PipelineQueries {
 
   // ---- V5: k-means clustering (deterministic distributed Lloyd) ------------
 
+  /** One trained centroid as a SQL `array<bigint>` literal — the one way
+    * every Lloyd tier's collected centroids re-enter a plan. */
+  private def centLit(c: Seq[Long]) =
+    c.mkString("cast(array(", ",", ") as array<bigint>)")
+  /** Squared L2 distance of the offset-unit vector column `u` to one
+    * quantized centroid, as a single codegen'd higher-order expression. */
+  private def kmDistExpr(c: Seq[Long]) = expr(
+    // r15 opt (guide §4): the interpreted aggregate(zip_with(...)) fold
+    // is CodegenFallback — vector_l2sq is the codegen'd exact twin
+    s"vector_l2sq(u, ${centLit(c)})")
+
+  /** The one quantize pass (vec_id, offset-unit u) every coarse Lloyd
+    * training and its report read — checkpointed so no iteration rescans. */
+  private[queries] def kmQuantized(spark: SparkSession, dir: String): DataFrame =
+    fanOut(spark, t(spark, dir, "embeddings"))
+      .select(col("vec_id"), e6Array(col("embedding"), KmOff).as("u"))
+      .localCheckpoint()
+
+  /** The quantized [[IvfCentroids]] seeds as iteration-0 Lloyd state. */
+  private[queries] lazy val kmSeedState: Seq[(Int, Seq[Long])] =
+    (1 to IvfCells).zip(IvfCentroids.map(_.map(e6(_) + KmOff)))
+
+  /** Adds c$tag (assigned cell, lowest id on ties) and d$tag (rounded
+    * 1e-6-unit squared distance to it) against one iteration's state. */
+  private def kmAssign(state: Seq[(Int, Seq[Long])], tag: String)(df: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
+    val ids = array(state.map { case (id, _) => lit(id) }: _*)
+    df.withColumn(s"s$tag", array(state.map { case (_, c) => kmDistExpr(c) }: _*))
+      .withColumn(s"p$tag",
+        array_position(col(s"s$tag"), array_min(col(s"s$tag"))).cast(IntegerType))
+      .withColumn(s"c$tag", element_at(ids, col(s"p$tag")))
+      .withColumn(s"d$tag", expr(s"(element_at(s$tag, p$tag) + 500000L) div 1000000L"))
+      .drop(s"s$tag", s"p$tag")
+  }
+
+  /** Lloyd's centroid update, shared by the coarse and the PQ trainings:
+    * per group of the int `keys` (cell, or subspace and code), exact
+    * integer sums of the offset-unit array column `v` over its `dims`
+    * dims, decoded as the HALF_UP integer mean `(2s + n) div 2n` (s and
+    * n are positive, so truncating division is floor). The collect is the
+    * ≤ groups×dims per-iteration centroid broadcast. Returns (key values,
+    * centroid) in ascending key order, so a first-min assignment over the
+    * list breaks ties to the lowest key. */
+  private[graft] def lloydUpdate(df: DataFrame, keys: Seq[Column], v: String, dims: Int)
+      : Seq[(Seq[Int], Seq[Long])] = {
+    // r15 opt (guide §2.3): per-dim sums as codegen'd aggregates over the
+    // array column instead of a posexplode through the hash agg
+    val aggs = count(lit(1)).as("n") +: (0 until dims).map(i => sum(col(v)(i)).as(s"s$i"))
+    val nk = keys.size
+    val rows = df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*).collect().toSeq
+    rows.map[(Seq[Int], Seq[Long])] { row =>
+      val n = row.getLong(nk)
+      ((0 until nk).map(row.getInt),
+        (0 until dims).map(i => (2 * row.getLong(nk + 1 + i) + n) / (2 * n)))
+    }.sortBy(_._1)(Ordering.Implicits.seqOrdering[Seq, Int])
+  }
+
+  /** One coarse Lloyd step: assign `u` under `state`, then [[lloydUpdate]]. */
+  private[queries] def lloydNext(u: DataFrame, state: Seq[(Int, Seq[Long])])
+      : Seq[(Int, Seq[Long])] =
+    lloydUpdate(kmAssign(state, "x")(u), Seq(col("cx")), "u", 64)
+      .map { case (k, c) => (k.head, c) }
+
+  /** The coarse quantizer after `iters` Lloyd steps from [[kmSeedState]]:
+    * one step for v22-v24 and v27/v28, [[V25Iters]] for v26 and v29. */
+  private def kmTrained(spark: SparkSession, dir: String, iters: Int): Seq[(Int, Seq[Long])] = {
+    val u = kmQuantized(spark, dir)
+    (1 to iters).foldLeft(kmSeedState)((st, _) => lloydNext(u, st))
+  }
+
   /** K-means over the embedding corpus — the clustering primitive behind
     * semantic curation (SemDeDup's cells, diversity sampling, topic
     * balancing). Two Lloyd iterations from the [[IvfCentroids]] literal
@@ -2616,8 +2729,8 @@ object PipelineQueries {
     *
     * Determinism (why an oracle can hash-match an iterative algorithm):
     * this is FIXED-POINT k-means. Each vector is quantized ONCE to 1e-6
-    * integer units (`floor(x·1e6 + 0.5)` — per-element single IEEE ops,
-    * bit-identical in any engine) plus a +[[KmOff]] shift that keeps every
+    * integer units ([[e6]] — per-element single IEEE ops, bit-identical in
+    * any engine) plus a +[[KmOff]] shift that keeps every
     * quantity non-negative so floor/truncating integer division agree
     * everywhere; distances are translation-invariant so the shift never
     * shows. From there EVERYTHING — assignment distances, the Lloyd
@@ -2625,76 +2738,61 @@ object PipelineQueries {
     * and the 1e-6-unit inertia — is pure integer arithmetic, immune to any
     * engine's float-summation order or rounding policy. Ties break to the
     * lowest cell id. */
-  /** Squared L2 distance of the offset-unit vector column `u` to one
-    * quantized centroid, as a single codegen'd higher-order expression. */
-  private def kmCentLit(c: Seq[Long]) =
-    c.mkString("cast(array(", ",", ") as array<bigint>)")
-  private def kmDistExpr(c: Seq[Long]) = expr(
-    // r15 opt (guide §4): the interpreted aggregate(zip_with(...)) fold
-    // is CodegenFallback — vector_l2sq is the codegen'd exact twin
-    s"vector_l2sq(u, ${kmCentLit(c)})")
-
-  /** One Lloyd refinement of the COARSE quantizer from the
-    * [[IvfCentroids]] literal seeds, in offset 1e-6 units: returns the
-    * assignment-0 frame (vec_id, u, cell0 — localCheckpointed) and the
-    * surviving (cell, trained centroid) list in ascending cell order.
-    * Shared by v5 (the clustering report) and v22 (serving on the
-    * trained cells) — one training, no drift; the v20/[[pqTrainLloyd]]
-    * discipline applied one level up, to the cell quantizer. The collect
-    * is the per-iteration centroid broadcast, ≤ cells×dims rows. */
-  private def ivfTrainLloyd(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[(Int, Seq[Long])]) = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    def quant(d: Double): Long = math.floor(d * 1e6 + 0.5).toLong + KmOff
-    val cq0 = IvfCentroids.map(_.map(quant))
-    val a0 = fanOut(spark, t(spark, dir, "embeddings"))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint) + ${KmOff}L)").as("u"))
-      .withColumn("s", array(cq0.map(kmDistExpr): _*))
-      // first-min position = lowest cell id on ties
-      .withColumn("cell0", array_position(col("s"), array_min(col("s"))).cast(IntegerType))
-      .drop("s")
-      .localCheckpoint() // update pass + second assignment share it; GC-released
-    // Lloyd update: exact integer unit sums per (cell, dim). The collect is
-    // the per-iteration centroid broadcast — ≤ cells×dims rows.
-    // r15 opt (guide §2.3): 64 codegen'd per-dim sums, no 64× posexplode
-    val dimAggs = count(lit(1)).as("n") +:
-      (0 until 64).map(i => sum(col("u")(i)).as(s"s$i"))
-    val upd = a0
-      .groupBy(col("cell0"))
-      .agg(dimAggs.head, dimAggs.tail: _*)
-      .collect()
-    val byCell: Seq[(Int, Seq[Long])] = upd.map { row =>
-      val n = row.getLong(1)
-      val cent = (0 until 64).map { i =>
-        // all-positive s, n ⇒ truncating div == floor == HALF_UP of s/n
-        (2 * row.getLong(2 + i) + n) / (2 * n)
-      }
-      (row.getInt(0), cent)
-    }.toSeq.sortBy(_._1) // ascending cells: first-min tie-break = lowest cell id
-    (a0, byCell)
-  }
-
   val v5Kmeans: Q = (spark, dir) => {
-    val (a0, byCell) = ivfTrainLloyd(spark, dir)
-    val cellIds = array(byCell.map { case (id, _) => lit(id) }: _*)
-    val centArr = expr(byCell.map { case (_, c) => kmCentLit(c) }.mkString("array(", ",", ")"))
-    a0.withColumn("s1", array(byCell.map { case (_, c) => kmDistExpr(c) }: _*))
-      .withColumn("p", array_position(col("s1"), array_min(col("s1"))).cast(IntegerType))
-      .withColumn("cell1", element_at(cellIds, col("p")))
-      .withColumn("cent", element_at(centArr, col("p")))
-      // 1e-12-unit squared distance → 1e-6 units, floor(x+0.5) per vector
-      .withColumn("d2u", expr(
-        "(vector_l2sq(u, cent) + 500000L) div 1000000L"))
-      .groupBy(col("cell1").as("cell"))
+    val u = kmQuantized(spark, dir)
+    val trained = lloydNext(u, kmSeedState)
+    kmAssign(trained, "1")(kmAssign(kmSeedState, "0")(u))
+      .groupBy(col("c1").as("cell"))
       .agg(
         count(lit(1)).as("n_members"),
-        sum(when(col("cell1") =!= col("cell0"), 1L).otherwise(0L)).as("n_moved"),
-        sum(col("d2u")).as("inertia_u"))
+        sum(when(col("c1") =!= col("c0"), 1L).otherwise(0L)).as("n_moved"),
+        sum(col("d1")).as("inertia_u"))
       .orderBy(col("cell"))
   }
 
   // ---- V20: PQ codebook training (per-subspace Lloyd refinement) -----------
+
+  /** One Lloyd refinement of [[PqCodebookQ]] in OFFSET 1e-6 units: returns
+    * the assignment-0 frame (vec_id, m, su, code0 — localCheckpointed)
+    * and, per subspace, the surviving (code, trained centroid) list in
+    * ascending code order. Shared by v20 (the training report) and v21
+    * (serving on the trained codebook) — one training, no drift. The
+    * collect is the per-iteration centroid broadcast, ≤ Sub·K·Dim rows
+    * (v5's sanctioned metadata collect). */
+  private[queries] def pqTrainLloyd(spark: SparkSession, dir: String)
+      : (DataFrame, Seq[(Int, Seq[(Int, Seq[Long])])]) = {
+    val sub = fanOut(spark, t(spark, dir, "embeddings"))
+      .select(col("vec_id"), e6Array(col("embedding"), KmOff).as("u"))
+      .select(col("vec_id"), explode(sequence(lit(0), lit(PqSub - 1))).as("m"), col("u"))
+      .withColumn("su", expr(s"slice(u, m * $PqDim + 1, $PqDim)"))
+      .drop("u")
+    pqLloydStepFrom(sub, PqCodebookQ.map(_.map(_.map(_ + KmOff))))
+  }
+
+  /** One exact-integer Lloyd step of an ARBITRARY per-subspace seed
+    * codebook over an already-sliced `(vec_id, m, su)` frame —
+    * [[pqTrainLloyd]]'s body with the seeds injected, so v27 can train
+    * in RESIDUAL space with data-derived seeds through the identical
+    * arithmetic (one step implementation, no drift). Seeds are in the
+    * same offset units as `su`. */
+  private def pqLloydStepFrom(sub: DataFrame, seeds: Seq[Seq[Seq[Long]]])
+      : (DataFrame, Seq[(Int, Seq[(Int, Seq[Long])])]) = {
+    graft.functions.GraftFunctions.ensureRegistered(sub.sparkSession)
+    val cbSql = seeds.map(_.map(centLit).mkString("array(", ",", ")"))
+      .mkString("array(", ",", ")")
+    val nCodes = seeds.head.size
+    val a0 = sub
+      .withColumn("s", expr(
+        s"""transform(sequence(1, $nCodes), k ->
+           |  vector_l2sq(su, element_at(element_at($cbSql, m + 1), k)))""".stripMargin))
+      .withColumn("code0", array_position(col("s"), array_min(col("s"))).cast(IntegerType))
+      .drop("s")
+      .localCheckpoint() // shared by the update agg and the reassignment
+    val byM = lloydUpdate(a0, Seq(col("m"), col("code0")), "su", PqDim)
+      .groupBy(_._1.head).toSeq.sortBy(_._1)
+      .map { case (m, cs) => m -> cs.map { case (k, c) => (k(1), c) } }
+    (a0, byM)
+  }
 
   /** The [[PqCodebook]] literals stand in for TRAINED sub-quantizers
     * (v6's doc note: "a real deployment trains them"); v20 IS that
@@ -2715,76 +2813,15 @@ object PipelineQueries {
     * [[PqSub]]·[[PqK]]·[[PqDim]] output cells regardless of corpus size.
     * Every surface is exact integer, so the oracle retrains the codebook
     * bit-for-bit. */
-  /** One Lloyd refinement of [[PqCodebookQ]] in OFFSET 1e-6 units: returns
-    * the assignment-0 frame (vec_id, m, su, code0 — localCheckpointed)
-    * and, per subspace, the surviving (code, trained centroid) list in
-    * ascending code order. Shared by v20 (the training report) and v21
-    * (serving on the trained codebook) — one training, no drift. The
-    * collect is the per-iteration centroid broadcast, ≤ Sub·K·Dim rows
-    * (v5's sanctioned metadata collect). */
-  private[queries] def pqTrainLloyd(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[(Int, Seq[(Int, Seq[Long])])]) = {
-    val sub = fanOut(spark, t(spark, dir, "embeddings"))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint) + ${KmOff}L)").as("u"))
-      .select(col("vec_id"), explode(sequence(lit(0), lit(PqSub - 1))).as("m"), col("u"))
-      .withColumn("su", expr(s"slice(u, m * $PqDim + 1, $PqDim)"))
-      .drop("u")
-    pqLloydStepFrom(sub, PqCodebookQ.map(_.map(_.map(_ + KmOff))))
-  }
-
-  /** One exact-integer Lloyd step of an ARBITRARY per-subspace seed
-    * codebook over an already-sliced `(vec_id, m, su)` frame —
-    * [[pqTrainLloyd]]'s body with the seeds injected, so v27 can train
-    * in RESIDUAL space with data-derived seeds through the identical
-    * arithmetic (one step implementation, no drift). Seeds are in the
-    * same offset units as `su`. */
-  private def pqLloydStepFrom(sub: DataFrame, seeds: Seq[Seq[Seq[Long]]])
-      : (DataFrame, Seq[(Int, Seq[(Int, Seq[Long])])]) = {
-    graft.functions.GraftFunctions.ensureRegistered(sub.sparkSession)
-    def cLit(c: Seq[Long]) = c.mkString("array(", ",", ")")
-    val cbSql = seeds.map(_.map(cLit).mkString("array(", ",", ")"))
-      .mkString("cast(array(", ",", ") as array<array<array<bigint>>>)")
-    val nCodes = seeds.head.size
-    val a0 = sub
-      .withColumn("s", expr(
-        s"""transform(sequence(1, $nCodes), k ->
-           |  vector_l2sq(su, element_at(element_at($cbSql, m + 1), k)))""".stripMargin))
-      .withColumn("code0", array_position(col("s"), array_min(col("s"))).cast(IntegerType))
-      .drop("s")
-      .localCheckpoint() // shared by the update agg and the reassignment
-    // Lloyd update: exact integer unit sums per (m, code, dim) — r15 opt
-    // (guide §2.3): PqDim codegen'd per-dim sums, no posexplode
-    val dimAggs = count(lit(1)).as("n") +:
-      (0 until PqDim).map(i => sum(col("su")(i)).as(s"s$i"))
-    val upd = a0
-      .groupBy(col("m"), col("code0"))
-      .agg(dimAggs.head, dimAggs.tail: _*)
-      .collect()
-    val byM = upd.groupBy(_.getInt(0)).toSeq
-      .map { case (m, rows) =>
-        m -> rows.map { row =>
-          val n = row.getLong(2)
-          val cent = (0 until PqDim).map { i =>
-            // all-positive su, n ⇒ truncating div == floor == HALF_UP of su/n
-            (2 * row.getLong(3 + i) + n) / (2 * n)
-          }
-          (row.getInt(1), cent)
-        }.toSeq.sortBy(_._1) // ascending codes: first-min tie-break = lowest code
-      }.sortBy(_._1)
-    (a0, byM)
-  }
-
   val v20PqTrain: Q = (spark, dir) => {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    def cLit(c: Seq[Long]) = c.mkString("array(", ",", ")")
     val (a0, byM) = pqTrainLloyd(spark, dir)
     val codes1Sql = byM.map { case (_, cs) =>
       cs.map(_._1.toString).mkString("array(", ",", ")")
     }.mkString("cast(array(", ",", ") as array<array<int>>)")
     val cents1Sql = byM.map { case (_, cs) =>
-      cs.map(c => cLit(c._2)).mkString("array(", ",", ")")
-    }.mkString("cast(array(", ",", ") as array<array<array<bigint>>>)")
+      cs.map(c => centLit(c._2)).mkString("array(", ",", ")")
+    }.mkString("array(", ",", ")")
     a0
       .withColumn("s1", expr(
         s"""transform(element_at($cents1Sql, m + 1), c ->
@@ -2799,6 +2836,18 @@ object PipelineQueries {
         sum(col("d2u")).as("inertia_u"))
       .orderBy(col("m"), col("code"))
   }
+
+  /** Per-subspace distance lists of the offset-unit `u` column to a
+    * TRAINED codebook (v20's `byM`), as one nested-array SQL expression:
+    * `dl[m][k]` = squared L2 of subvector m to the k-th surviving
+    * trained sub-centroid. Shared by v21 and v22's serving paths. */
+  private def pqDistSql(byM: Seq[(Int, Seq[(Int, Seq[Long])])],
+                        vcol: String = "u"): String =
+    byM.map { case (m, cs) =>
+      cs.map { case (_, cent) =>
+        s"vector_l2sq(slice($vcol, ${m * PqDim + 1}, $PqDim), ${centLit(cent)})"
+      }.mkString("array(", ",", ")")
+    }.mkString("array(", ",", ")")
 
   /** V21: the closed loop — v6's ADC serving on v20's TRAINED codebook.
     * Train (one Lloyd refinement per subspace), re-encode every vector
@@ -2816,25 +2865,11 @@ object PipelineQueries {
     * the v5-sanctioned metadata collect. Distances run in OFFSET units
     * (offset-invariant for squared differences), so all arithmetic stays
     * all-positive exact integer. */
-  /** Per-subspace distance lists of the offset-unit `u` column to a
-    * TRAINED codebook (v20's `byM`), as one nested-array SQL expression:
-    * `dl[m][k]` = squared L2 of subvector m to the k-th surviving
-    * trained sub-centroid. Shared by v21 and v22's serving paths. */
-  private def pqDistSql(byM: Seq[(Int, Seq[(Int, Seq[Long])])],
-                        vcol: String = "u"): String =
-    byM.map { case (m, cs) =>
-      cs.map { case (_, cent) =>
-        s"""vector_l2sq(slice($vcol, ${m * PqDim + 1}, $PqDim),
-           |  cast(array(${cent.mkString(",")}) as array<bigint>))""".stripMargin
-      }.mkString("array(", ",", ")")
-    }.mkString("array(", ",", ")")
-
   val v21TrainedPqServe: Q = (spark, dir) => {
     val (_, byM) = pqTrainLloyd(spark, dir)
     val distSql = pqDistSql(byM)
     val enc = fanOut(spark, t(spark, dir, "embeddings"))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint) + ${KmOff}L)").as("u"))
+      .select(col("vec_id"), e6Array(col("embedding"), KmOff).as("u"))
       .withColumn("dl", expr(distSql))
       .withColumn("code", expr("transform(dl, l -> array_position(l, array_min(l)) - 1)"))
       .drop("u")
@@ -2857,7 +2892,7 @@ object PipelineQueries {
     * loop but still served over the whole corpus (plain ADC); v3/v7/v15/
     * v18 route through cells but assign against the hard-coded
     * [[IvfCentroids]]. v22 composes BOTH trainings: the coarse cells are
-    * [[ivfTrainLloyd]]'s one exact-integer Lloyd refinement (v5's step —
+    * one exact-integer Lloyd refinement from [[kmSeedState]] (v5's step —
     * the literals survive only as k-means SEEDS, the standard role of an
     * init), the codebook is [[pqTrainLloyd]]'s (v20), and serving is the
     * real IVF-PQ read path — assign every vector to its nearest TRAINED
@@ -2885,31 +2920,6 @@ object PipelineQueries {
     ivfServeFrom(enc, cellIds)
   }
 
-  /** V23: v22's fully-trained index PERSISTED through the snapshot
-    * store — the last literal retired from a PERSISTED serving path
-    * (v15/v18 persist the literal-quantizer index; v22 serves trained
-    * but rebuilds per run). Train coarse + codebook, then the index
-    * rows `(vec_id, cell, code)` — ~12 B/vector, the RAM-resident tier
-    * at 10⁹ vectors — MERGE through the store in two batches with a
-    * redelivered overlap (v15's at-least-once discipline: the keyed
-    * merge must swallow the replay), and SERVING READS ONLY THE
-    * PERSISTED TABLE: the query side recomputes its own probe cells and
-    * ADC table from its raw vector against the TRAINED
-    * collected-centroid literals — exactly what a serving node holds —
-    * and candidates come from the broadcast cell equi-join. The result
-    * must hash-match v22's per-run-rebuild oracle VERBATIM: a
-    * mis-merged row, a dropped overlap or any train/serve drift through
-    * the persistence boundary reds the hash.
-    *
-    * Scale shape: v22's serving plan over a store read; the index build
-    * is incremental (each batch encodes only itself — the corpus is
-    * never re-encoded), so the nightly refresh costs O(new vectors).
-    * v18's partition-by-cell + DPP layout applies orthogonally. */
-  /** Trained-quantizer encode shared by v23/v24 — one training, no
-    * drift: trains coarse cells ([[ivfTrainLloyd]]) + codebook
-    * ([[pqTrainLloyd]]) and returns the cell-id literal plus an encode
-    * function adding (u, ks, p, cell, dl, code) to an embeddings-shaped
-    * frame (v22's per-vector encode, verbatim). */
   /** Encoder against an ARBITRARY trained coarse state + PQ codebook:
     * adds (u, ks, p, cell, dl, code) to an embeddings-shaped frame
     * (v22's per-vector encode, verbatim). Shared by [[trainedEncoder]]
@@ -2921,8 +2931,7 @@ object PipelineQueries {
     val encode = (src: DataFrame) => {
       graft.functions.GraftFunctions.ensureRegistered(src.sparkSession)
       src
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint) + ${KmOff}L)").as("u"))
+      .select(col("vec_id"), e6Array(col("embedding"), KmOff).as("u"))
       .withColumn("ks", array(byCell.map { case (_, c) => kmDistExpr(c) }: _*))
       .withColumn("p", array_position(col("ks"), array_min(col("ks"))).cast(IntegerType))
       .withColumn("cell", element_at(cellIds, col("p")))
@@ -2932,12 +2941,18 @@ object PipelineQueries {
     (cellIds, encode)
   }
 
+  /** Trained-quantizer encode shared by v22-v24 — one training, no
+    * drift: trains coarse cells (one [[lloydNext]] step from
+    * [[kmSeedState]]) + codebook ([[pqTrainLloyd]]) and returns the
+    * cell-id literal plus an encode function adding
+    * (u, ks, p, cell, dl, code) to an embeddings-shaped frame (v22's
+    * per-vector encode, verbatim). */
   private def trainedEncoder(spark: SparkSession, dir: String)
       : (Column, DataFrame => DataFrame) = {
     // r15 opt (§2.6): the coarse training and the PQ training are
     // independent eager chains — overlap their jobs
-    val ((_, byCell), (_, byM)) =
-      inParallel(spark, ivfTrainLloyd(spark, dir), pqTrainLloyd(spark, dir))
+    val (byCell, (_, byM)) =
+      inParallel(spark, kmTrained(spark, dir, 1), pqTrainLloyd(spark, dir))
     quantEncoder(byCell, byM)
   }
 
@@ -2966,6 +2981,26 @@ object PipelineQueries {
       .orderBy(col("q_id"), col("rk"))
   }
 
+  /** V23: v22's fully-trained index PERSISTED through the snapshot
+    * store — the last literal retired from a PERSISTED serving path
+    * (v15/v18 persist the literal-quantizer index; v22 serves trained
+    * but rebuilds per run). Train coarse + codebook, then the index
+    * rows `(vec_id, cell, code)` — ~12 B/vector, the RAM-resident tier
+    * at 10⁹ vectors — MERGE through the store in two batches with a
+    * redelivered overlap (v15's at-least-once discipline: the keyed
+    * merge must swallow the replay), and SERVING READS ONLY THE
+    * PERSISTED TABLE: the query side recomputes its own probe cells and
+    * ADC table from its raw vector against the TRAINED
+    * collected-centroid literals — exactly what a serving node holds —
+    * and candidates come from the broadcast cell equi-join. The result
+    * must hash-match v22's per-run-rebuild oracle VERBATIM: a
+    * mis-merged row, a dropped overlap or any train/serve drift through
+    * the persistence boundary reds the hash.
+    *
+    * Scale shape: v22's serving plan over a store read; the index build
+    * is incremental (each batch encodes only itself — the corpus is
+    * never re-encoded), so the nightly refresh costs O(new vectors).
+    * v18's partition-by-cell + DPP layout applies orthogonally. */
   val v23PersistedTrainedIvf: Q = (spark, dir) => {
     import graft.incremental.SnapshotStore
     val root = java.nio.file.Files.createTempDirectory("graft-tidx").toString
@@ -3081,7 +3116,7 @@ object PipelineQueries {
     * steering control flow the oracle couldn't replay. */
   val V25Iters = 4
 
-  /** V25: the full k-means TRAINING LOOP — [[ivfTrainLloyd]]'s one
+  /** V25: the full k-means TRAINING LOOP — [[lloydNext]]'s one
     * exact-integer Lloyd step iterated [[V25Iters]] times, with EVERY
     * iteration's centroid state MERGED through the snapshot store (g1's
     * iteration discipline composed with v23's persistence — the two
@@ -3107,58 +3142,6 @@ object PipelineQueries {
     * incrementally, and a training job restarted at iteration k replays
     * nothing before k. The report is one further map pass with all
     * [[V25Iters]]+1 assignments fused into a single projection. */
-  /** The one quantize pass (vec_id, offset-unit u) the Lloyd loop and
-    * its report both read — checkpointed so no iteration rescans. */
-  private[queries] def kmQuantized(spark: SparkSession, dir: String): DataFrame =
-    fanOut(spark, t(spark, dir, "embeddings"))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint) + ${KmOff}L)").as("u"))
-      .localCheckpoint()
-
-  /** The quantized [[IvfCentroids]] seeds as iteration-0 Lloyd state. */
-  private[queries] lazy val kmSeedState: Seq[(Int, Seq[Long])] =
-    (1 to IvfCells).zip(IvfCentroids.map(_.map(d =>
-      math.floor(d * 1e6 + 0.5).toLong + KmOff)))
-
-  /** Adds c$tag (assigned cell, lowest id on ties) and d$tag (rounded
-    * 1e-6-unit squared distance to it) against one iteration's state. */
-  private def kmAssign(state: Seq[(Int, Seq[Long])], tag: String)(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    val ids = array(state.map { case (id, _) => lit(id) }: _*)
-    df.withColumn(s"s$tag", array(state.map { case (_, c) => kmDistExpr(c) }: _*))
-      .withColumn(s"p$tag",
-        array_position(col(s"s$tag"), array_min(col(s"s$tag"))).cast(IntegerType))
-      .withColumn(s"c$tag", element_at(ids, col(s"p$tag")))
-      .withColumn(s"d$tag", expr(s"(element_at(s$tag, p$tag) + 500000L) div 1000000L"))
-      .drop(s"s$tag", s"p$tag")
-  }
-
-  /** One Lloyd step: assign `u` under `state`, update by HALF_UP integer
-    * mean. The collect is the ≤ cells×dims per-iteration centroid
-    * broadcast (v5's sanctioned metadata pull). Shared by v25 (which
-    * persists every state) and v26 (which serves on the converged one). */
-  private[queries] def lloydNext(u: DataFrame, state: Seq[(Int, Seq[Long])])
-      : Seq[(Int, Seq[Long])] = {
-    // r15 opt (guide §2.3): per-dim sums as 64 codegen'd aggregates over
-    // the array column instead of a 64× posexplode through the hash agg —
-    // same exact integer sums, no row expansion, one collect of
-    // |cells| × 66 cells of metadata
-    val dimAggs = count(lit(1)).as("n") +:
-      (0 until 64).map(i => sum(col("u")(i)).as(s"s$i"))
-    val upd = kmAssign(state, "x")(u)
-      .groupBy(col("cx").as("cell"))
-      .agg(dimAggs.head, dimAggs.tail: _*)
-      .collect()
-    upd.map { row =>
-      val n = row.getLong(1)
-      val cent = (0 until 64).map { i =>
-        // all-positive su, n ⇒ truncating div == floor == HALF_UP of su/n
-        (2 * row.getLong(2 + i) + n) / (2 * n)
-      }
-      (row.getInt(0), cent)
-    }.toSeq.sortBy(_._1) // ascending cells: first-min tie-break = lowest cell
-  }
-
   val v25LloydConvergence: Q = (spark, dir) => {
     import graft.incremental.SnapshotStore
     val root = java.nio.file.Files.createTempDirectory("graft-lloyd").toString
@@ -3228,12 +3211,8 @@ object PipelineQueries {
   val v26ConvergedIvfServe: Q = (spark, dir) => {
     // r15 opt (§2.6): the coarse convergence loop and the PQ training are
     // independent eager chains — overlap their jobs
-    val (state, (_, byM)) = inParallel(spark, {
-      val u = kmQuantized(spark, dir)
-      var st = kmSeedState
-      for (_ <- 1 to V25Iters) st = lloydNext(u, st)
-      st
-    }, pqTrainLloyd(spark, dir))
+    val (state, (_, byM)) =
+      inParallel(spark, kmTrained(spark, dir, V25Iters), pqTrainLloyd(spark, dir))
     val (cellIds, encode) = quantEncoder(state, byM)
     val enc = encode(fanOut(spark, t(spark, dir, "embeddings")))
       .drop("u", "p")
@@ -3255,7 +3234,7 @@ object PipelineQueries {
     * coarse quantizer explains the between-cell variance, so the same
     * 4-bit budget spends its codes on a tighter distribution. This is
     * the one encoding asymmetry left after v22-v26: they all PQ-encode
-    * raw vectors. Chain: trained coarse cells ([[ivfTrainLloyd]]) →
+    * raw vectors. Chain: trained coarse cells ([[kmTrained]], one step) →
     * per-vector residual in re-offset units ([[ResOff]]) → residual
     * codebook seeded from the residuals of the [[PqK]] smallest vec_ids
     * (deterministic data-derived seeds — the standard sample-init — so
@@ -3301,7 +3280,7 @@ object PipelineQueries {
     * the checkpointed per-vector frame with u/ks/cell/r). */
   private def residualTrained(spark: SparkSession, dir: String)
       : (Column, String, Seq[(Int, Seq[(Int, Seq[Long])])], DataFrame) =
-    residualTrainedFrom(spark, dir, ivfTrainLloyd(spark, dir)._2)
+    residualTrainedFrom(spark, dir, kmTrained(spark, dir, 1))
 
   /** [[residualTrained]]'s body over an ARBITRARY coarse state (cell →
     * centroid, ascending cells): v27/v28 pass the 1-step Lloyd state,
@@ -3312,11 +3291,10 @@ object PipelineQueries {
       : (Column, String, Seq[(Int, Seq[(Int, Seq[Long])])], DataFrame) = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val cellIds = array(byCell.map { case (id, _) => lit(id) }: _*)
-    val centsSql = byCell.map { case (_, c) => kmCentLit(c) }
+    val centsSql = byCell.map { case (_, c) => centLit(c) }
       .mkString("array(", ",", ")")
     val enc0 = fanOut(spark, t(spark, dir, "embeddings"))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> cast(floor(cast(x as double) * 1000000.0d + 0.5d) as bigint) + ${KmOff}L)").as("u"))
+      .select(col("vec_id"), e6Array(col("embedding"), KmOff).as("u"))
       .withColumn("ks", array(byCell.map { case (_, c) => kmDistExpr(c) }: _*))
       .withColumn("p", array_position(col("ks"), array_min(col("ks"))).cast(IntegerType))
       .withColumn("cell", element_at(cellIds, col("p")))
@@ -3473,10 +3451,8 @@ object PipelineQueries {
     * (queries × probe)-sized broadcast. The corpus is never crossed or
     * shuffled on the serve path. */
   val v29ConvergedResidual: Q = (spark, dir) => {
-    val u = kmQuantized(spark, dir)
-    var state = kmSeedState
-    for (_ <- 1 to V25Iters) state = lloydNext(u, state)
-    persistedResidualServe(spark, "cridx", residualTrainedFrom(spark, dir, state))
+    persistedResidualServe(spark, "cridx",
+      residualTrainedFrom(spark, dir, kmTrained(spark, dir, V25Iters)))
   }
 
   // ---- D5: embedding-cosine near-dup (LSH-blocked pair mining) -------------
@@ -3521,7 +3497,7 @@ object PipelineQueries {
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"),
-        floor((expr("vector_dot(x.v, y.v)") / (col("x.nrm") * col("y.nrm"))) * lit(1e6) + lit(0.5)).as("cos_e6"))
+        e6(expr("vector_dot(x.v, y.v)") / (col("x.nrm") * col("y.nrm"))).as("cos_e6"))
       .filter(col("cos_e6") >= lit(300000L))
       .distinct()
       .orderBy(col("a_id"), col("b_id"))
@@ -3557,7 +3533,7 @@ object PipelineQueries {
     val dup = e.as("x").join(e.as("y"),
         col("x.cell") === col("y.cell") && col("y.vec_id") < col("x.vec_id") &&
           col("x.nrm") > 0 && col("y.nrm") > 0 &&
-          floor((expr("vector_dot(x.v, y.v)") / (col("x.nrm") * col("y.nrm"))) * lit(1e6) + lit(0.5))
+          e6(expr("vector_dot(x.v, y.v)") / (col("x.nrm") * col("y.nrm")))
             >= lit((SemThresh * 1e6).toLong),
         "left_semi")
       .select(col("vec_id"), lit(1).as("dup"))
@@ -3969,10 +3945,8 @@ object PipelineQueries {
       .filter(col("n_cap") >= 1 && col("n_img") >= 1)
       .withColumn("cd", expr("transform(cgrid, x -> cast(x as double))"))
       .withColumn("gd", expr("transform(igrid, x -> cast(x as double))"))
-      .withColumn("cos_e6", floor(
-        (expr("vector_dot(cd, gd)") /
-          (sqrt(expr("vector_dot(cd, cd)")) * sqrt(expr("vector_dot(gd, gd)"))))
-          * lit(1e6) + lit(0.5)))
+      .withColumn("cos_e6", e6(expr("vector_dot(cd, gd)") /
+        (sqrt(expr("vector_dot(cd, cd)")) * sqrt(expr("vector_dot(gd, gd)")))))
       .withColumn("keep", col("cos_e6") >= M8Threshold)
       .select(col("doc_id"), col("n_cap"), col("n_img"), col("cos_e6"), col("keep"))
       // r14 opt: sort-sampling would re-run the grid join + the cosine
@@ -5613,8 +5587,8 @@ object PipelineQueries {
       // per-row float→int floor BEFORE any aggregation a consumer might
       // run (order-free exactness); max(w, τ) is the DLT unbiased
       // estimate, τ = 0 for a source with ≤ k docs (estimate EXACT)
-      .withColumn("est_w_e6", expr(
-        "cast(floor(greatest(cast(wt as double), coalesce(tau, 0.0d)) * 1000000.0d + 0.5d) as bigint)"))
+      .withColumn("est_w_e6",
+        e6(greatest(col("wt").cast(DoubleType), coalesce(col("tau"), lit(0.0d)))))
       .select(col("g").as("source"), col("rk").cast(LongType).as("rk"),
         col("doc_id"), col("wt").as("n_chars"), col("h"), col("est_w_e6"))
       .orderBy(col("source"), col("rk"))
@@ -5727,14 +5701,20 @@ object PipelineQueries {
 
   /** The corpus value sets + the planted seed source. */
   private[graft] def k11Values(spark: SparkSession, dir: String): DataFrame = {
+    val docs = t(spark, dir, "documents")
     val seed = spark.createDataFrame(K11Seed).toDF("g", "h")
     // r15 opt (guide §2.4 "a distinct on data that is already unique"):
     // k11BatchValues is already distinct, the 3-row seed is distinct, and
     // the seed source name is disjoint from every tier — so the union IS
     // distinct, and the outer .distinct() here was a full extra
-    // shuffle+hash-agg of the corpus value set per run
-    k11BatchValues(fanOut(spark, t(spark, dir, "documents")))
-      .unionByName(seed)
+    // shuffle+hash-agg of the corpus value set per run. The disjointness
+    // is asserted, not assumed: one filtered source scan, ≤ 1 row back.
+    val clash = docs.select(col("source"))
+      .filter(col("source").isin(K11Seed.map(_._1).distinct: _*)).limit(1).collect()
+    require(clash.isEmpty,
+      s"k11: documents.source '${clash.head.getString(0)}' is a planted K11Seed " +
+        "source name — the corpus ∪ seed value set would no longer be distinct")
+    k11BatchValues(fanOut(spark, docs)).unionByName(seed)
   }
 
   /** The KMV sketch: each source's [[K11k]] SMALLEST distinct hashes.
@@ -7951,7 +7931,7 @@ object PipelineQueries {
         // identically-computed double, so no rounding-policy divergence
         // sits on the hashed surface; the ≤1-ulp libm ln() skew remains
         // the only (pre-existing, value-distance-monitored) residual
-        floor((col("s") / col("n_tokens")) * lit(1e6) + lit(0.5)).as("lm_xent_e6"))
+        e6(col("s") / col("n_tokens")).as("lm_xent_e6"))
   }
 
   val t15LmScore: Q = (spark, dir) =>
@@ -8137,9 +8117,9 @@ object PipelineQueries {
       .withColumn("u",
         (pmod(expr("cast(conv(substring(md5(concat('dsir:', cast(doc_id as string))),1,15),16,10) as bigint)"),
           lit(1000L)).cast(DoubleType) + lit(0.5)) / lit(1000.0))
-      .withColumn("lw_e6", floor(col("lw") * lit(1e6) + lit(0.5)).cast("long"))
+      .withColumn("lw_e6", e6(col("lw")))
       .withColumn("key_e6",
-        floor((col("lw") - log(-log(col("u")))) * lit(1e6) + lit(0.5)).cast("long"))
+        e6(col("lw") - log(-log(col("u")))))
       .orderBy(col("key_e6").desc, col("doc_id")).limit(DsirK)
       .withColumn("rk", row_number()
         .over(Window.orderBy(col("key_e6").desc, col("doc_id"))).cast("long"))

@@ -296,6 +296,19 @@ class SketchSpec extends SparkSpec {
     assert(onePass == merged, "min-k of per-shard min-k's must equal one-pass min-k")
   }
 
+  test("k11: a corpus source named like a planted seed source fails loudly, naming it") {
+    import graft.queries.PipelineQueries
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-k11-seed").toString
+    // the union with the seed is distinct only while the names are disjoint
+    Seq((1L, "alpha beta gamma delta", "en", "web", 22L),
+        (2L, "beta gamma delta epsilon", "en", "seed_tiny", 24L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val e = intercept[IllegalArgumentException](PipelineQueries.k11Values(spark, tmp))
+    assert(e.getMessage.contains("seed_tiny"), e.getMessage)
+  }
+
   test("k12: the rollup served from day partials equals the direct sketch over " +
       "raw values, and both serving modes live at this tier") {
     import graft.queries.PipelineQueries
